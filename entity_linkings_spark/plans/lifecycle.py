@@ -221,12 +221,16 @@ class StageRunner:
         self, stage: str, fingerprint: str, build: Callable[[], DataFrame]
     ) -> StageResult:
         snapshot_id = _fingerprint(stage, fingerprint)
-        t0 = time.time()
         if self.store.committed(stage, snapshot_id):
-            df = self.store.read(stage, snapshot_id)
-            res = StageResult(df, snapshot_id, True, -1, 0)
             self.events.append({"stage": stage, "snapshot_id": snapshot_id, "resumed": True})
-            return res
+            return StageResult(self.store.read(stage, snapshot_id), snapshot_id, True, -1, 0)
+        return self.rebuild(stage, fingerprint, build)
+
+    def rebuild(self, stage: str, fingerprint: str, build: Callable[[], DataFrame]) -> StageResult:
+        """Build and commit ``stage`` whether or not its snapshot is
+        committed: a snapshot derived from a rebuilt input is stale."""
+        snapshot_id = _fingerprint(stage, fingerprint)
+        t0 = time.time()
         df = build()
         self.store.write(stage, snapshot_id, df)
         out = self.store.read(stage, snapshot_id)
@@ -267,7 +271,9 @@ def run_linkage(
 ) -> dict[str, object]:
     """The full pipeline under the lifecycle runner: every stage committed as
     a snapshot; a rerun with the same ``input_fingerprint`` resumes every
-    already-committed stage (kill-and-rerun safe)."""
+    already-committed stage (kill-and-rerun safe) and rebuilds every stage
+    downstream of a rebuilt one. Stages run one at a time: concurrent appends
+    to the one ``_metrics`` path collide in the committer's ``_temporary``."""
     from entity_linkings_spark.plans.pipeline import LinkageConfig, LinkagePipeline
 
     cfg = config or LinkageConfig()
@@ -276,32 +282,14 @@ def run_linkage(
     runner = StageRunner(store)
     fp = _fingerprint(input_fingerprint, repr(cfg))
 
-    mentions = runner.run("mentions", fp, lambda: pipe.mentions(transcripts))
-    surfaces = runner.run("surfaces", fp, lambda: pipe.surfaces(mentions.df))
-    keys = runner.run("blocking_keys", fp, lambda: pipe.surface_keys(surfaces.df))
-    pairs = runner.run("pairs", fp, lambda: pipe.pairs(surfaces.df, keys.df))
-    scored = runner.run("scored", fp, lambda: pipe.scored_pairs(pairs.df, surfaces.df))
-    resolved = runner.run("resolved", fp, lambda: pipe.resolve(surfaces.df, keys.df))
-    clusters = runner.run(
-        "clusters", fp, lambda: pipe.clusters(scored.df, surfaces.df, resolved.df)
-    )
-    resolved_mentions = runner.run(
-        "resolved_mentions",
-        fp,
-        lambda: pipe.mention_clusters(mentions.df, clusters.df)
-        .join(resolved.df.select("skey", "entity_id", "score"), "skey", "left")
-        .select(
-            "conv_id", "turn_idx", "start", "end", "mention",
-            "mention_id", "cluster_id", "entity_id", "score",
-        ),
-    )
-    return {
-        "runner": runner,
-        "mentions": mentions,
-        "surfaces": surfaces,
-        "pairs": pairs,
-        "scored": scored,
-        "resolved": resolved,
-        "clusters": clusters,
-        "resolved_mentions": resolved_mentions,
-    }
+    results: dict[str, StageResult] = {}
+
+    def durable(stage, build) -> DataFrame:
+        stale = any(not results[i].resumed for i in stage.inputs if i in results)
+        run = runner.rebuild if stale else runner.run
+        results[stage.name] = run(stage.name, fp, build)
+        return results[stage.name].df
+
+    pipe.build(transcripts, durable)
+    del results["blocking_keys"]  # not among the return keys
+    return {"runner": runner, **results}

@@ -37,7 +37,10 @@ the reference's own design implies.
 
 from __future__ import annotations
 
+from collections import namedtuple
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -95,6 +98,22 @@ class LinkageConfig:
     # default so run()'s output dict and every default plan stay
     # byte-identical; costs one hash aggregate plus one bounded
     # (cluster, entity) count when on.
+
+
+# The paper's dataflow in build order: each stage's name, the stages it reads
+# ("transcripts" is the caller's input) and the LinkagePipeline method that
+# builds it. Names double as durable snapshot names: renaming one orphans them.
+Stage = namedtuple("Stage", "name inputs method")
+STAGES = (
+    Stage("mentions", ("transcripts",), "mentions"),
+    Stage("surfaces", ("mentions",), "surfaces"),
+    Stage("blocking_keys", ("surfaces",), "surface_keys"),
+    Stage("pairs", ("surfaces", "blocking_keys"), "pairs"),
+    Stage("scored", ("pairs", "surfaces"), "scored_pairs"),
+    Stage("resolved", ("surfaces", "blocking_keys"), "resolve"),
+    Stage("clusters", ("scored", "surfaces", "resolved"), "clusters"),
+    Stage("resolved_mentions", ("mentions", "clusters", "resolved"), "resolved_mentions"),
+)
 
 
 class LinkagePipeline:
@@ -279,6 +298,16 @@ class LinkagePipeline:
             clusters.withColumnRenamed("node", "skey"), "skey", "left"
         ).withColumn("cluster_id", F.coalesce("cluster_id", "skey"))
 
+    def resolved_mentions(self, mentions: DataFrame, clusters: DataFrame,
+                          resolved: DataFrame) -> DataFrame:
+        """One row per mention instance with its cluster and resolved entity."""
+        return self.mention_clusters(mentions, clusters).join(
+            resolved.select("skey", "entity_id", "score"), "skey", "left"
+        ).select(
+            "conv_id", "turn_idx", "start", "end", "mention",
+            "mention_id", "cluster_id", "entity_id", "score",
+        )
+
     # ---- top-1 entity resolution (reference predict semantics) --------------
     def resolve(self, surfaces: DataFrame, keys: DataFrame | None = None) -> DataFrame:
         """(skey, surface, entity_id, score): prior fast path, else blocked +
@@ -390,78 +419,32 @@ class LinkagePipeline:
         )
         return blocking_quality(golds, keyed)
 
-    @staticmethod
-    def _materialize_concurrently(cached: list[DataFrame]) -> None:
-        """Populate several cached DataFrames with concurrent count() jobs
-        (guide §2.6). Job descriptions/groups are thread-local, so each job
-        keeps its own label; exceptions propagate to the caller."""
-        from concurrent.futures import ThreadPoolExecutor
+    # ---- the stage graph, walked in order ------------------------------------
+    def build(self, transcripts: DataFrame, materialize, upto: str = "resolved_mentions"):
+        """Build ``upto`` and its ancestors in ``STAGES`` order. Each stage goes
+        through ``materialize(stage, build)``, which runs ``build()`` and
+        returns the DataFrame later stages read."""
+        need = {upto}
+        for st in reversed(STAGES):
+            if st.name in need:
+                need.update(st.inputs)
+        out = {"transcripts": transcripts}
+        for st in STAGES:
+            if st.name in need:
+                build = partial(getattr(self, st.method), *(out[i] for i in st.inputs))
+                out[st.name] = materialize(st, build)
+        del out["transcripts"]
+        return out
 
-        if len(cached) < 2:
-            for df in cached:
-                df.count()
-            return
-        with ThreadPoolExecutor(max_workers=len(cached)) as pool:
-            list(pool.map(lambda df: df.count(), cached))
-
-    # ---- full run ------------------------------------------------------------
     def run(self, transcripts: DataFrame) -> dict[str, DataFrame]:
-        """Compose all stages. Shared intermediates are materialized once
-        (lazy localCheckpoints): surfaces, scored and resolved each feed
-        multiple downstream branches (and the CC driver loop runs repeated
-        actions) — without materialization Spark would recompute the whole
-        upstream per branch. The lifecycle runner (plans/lifecycle.py)
-        replaces these in-memory snapshots with durable ones."""
-        # Shared intermediates are LAZY localCheckpoints rather than cache():
-        # both materialize once per run, but the checkpoint also TRUNCATES
-        # lineage (the DataFrame's plan becomes a LogicalRDD). With cache()
-        # the analyzed trees nest — mentions inside surfaces inside keys
-        # inside scored/resolved inside the final join — so the downstream
-        # plans grow combinatorially (the resolved_mentions tree passed 5,000
-        # Exchange nodes printed) and Catalyst analysis/planning time, not
-        # execution, dominated the tail of the query (guide §3.3 "very large
-        # plans: planning time itself can become the bottleneck").
-        mentions = self.mentions(transcripts).localCheckpoint(eager=False)
-        surfaces = self.surfaces(mentions).localCheckpoint(eager=False)
-        keys = self.surface_keys(surfaces).localCheckpoint(eager=False)
-        # one action pins the shared prefix (computing keys materializes the
-        # mentions and surfaces checkpoints as a side effect) so the two
-        # concurrent tails below cannot race its partitions into duplicate
-        # upstream recomputation — the documented lazy-checkpoint hazard
-        keys.count()
-        pairs = self.pairs(surfaces, keys)
-        scored = self.scored_pairs(pairs, surfaces).localCheckpoint(eager=False)
-        resolved = self.resolve(surfaces, keys).localCheckpoint(eager=False)
-        # Materialize the two independent branches as CONCURRENT jobs before
-        # the clustering probe consumes both (guide §2.6 "overlap independent
-        # jobs"): the scored tail (pair generation + Arrow scoring) and the
-        # resolved tail (dictionary keying + argmax) are disjoint above the
-        # pinned prefix, so they back-fill each other's idle capacity.
-        # Populating a checkpoint is not a result: every output stays
-        # bit-identical, and each run() still computes everything from its
-        # inputs.
-        self._materialize_concurrently([scored, resolved])
-        clusters = self.clusters(scored, surfaces, resolved)
-        mention_clusters = self.mention_clusters(mentions, clusters)
-        resolved_mentions = (
-            mention_clusters.join(resolved.select("skey", "entity_id", "score"), "skey", "left")
-            .select(
-                "conv_id", "turn_idx", "start", "end", "mention",
-                "mention_id", "cluster_id", "entity_id", "score",
-            )
-            .orderBy("conv_id", "turn_idx", "start")  # T6 stable ordering
-        )
-        out = {
-            "mentions": mentions,
-            "surfaces": surfaces,
-            "pairs": pairs,
-            "scored": scored,
-            "clusters": clusters,
-            "resolved": resolved,
-            "resolved_mentions": resolved_mentions,
-        }
+        """The whole graph through ``InMemory``, ``resolved_mentions`` in T6
+        stable order. Its lazy localCheckpoints are lost on executor loss or
+        dynamic-allocation scale-in; resilient runs use ``run_linkage``."""
+        out = self.build(transcripts, InMemory())
+        del out["blocking_keys"]
+        out["resolved_mentions"] = out["resolved_mentions"].orderBy("conv_id", "turn_idx", "start")
         if self.cfg.golden:
-            out["golden"] = self.golden(clusters, surfaces, resolved)
+            out["golden"] = self.golden(out["clusters"], out["surfaces"], out["resolved"])
         return out
 
     def golden(
@@ -484,3 +467,43 @@ class LinkagePipeline:
             {"surface": "longest", "entity_id": "mode", "score": "max"},
             key="skey",
         )
+
+
+class InMemory:
+    """``LinkagePipeline.run``'s materializer. A stage read by several later
+    stages becomes a lazy localCheckpoint: computed once per run and, unlike
+    cache(), with its lineage cut (nested cached plans made planning time
+    dominate). Checkpointed partitions live only in executor memory: executor
+    loss or dynamic-allocation scale-in fails the run, where ``run_linkage``'s
+    durable snapshots would resume. One count() on ``PIN`` computes the shared
+    prefix; the ``CONCURRENT`` branches, disjoint above it, are then populated
+    by concurrent jobs. Scored is checkpointed although clusters alone reads
+    it, because connected components runs one action per round over it."""
+
+    PIN = "blocking_keys"
+    CONCURRENT = ("scored", "resolved")
+
+    def __init__(self):
+        self.branches = []
+
+    def __call__(self, stage: Stage, build) -> DataFrame:
+        df = build()
+        readers = sum(stage.name in st.inputs for st in STAGES)
+        if readers > 1 or stage.name in self.CONCURRENT:
+            df = df.localCheckpoint(eager=False)
+        if stage.name == self.PIN:
+            df.count()
+        if stage.name in self.CONCURRENT:
+            self.branches.append((stage.name, df))
+            if len(self.branches) == len(self.CONCURRENT):
+                with ThreadPoolExecutor(len(self.branches)) as pool:
+                    list(pool.map(_populate, self.branches))
+        return df
+
+
+def _populate(branch: tuple[str, DataFrame]) -> None:
+    """count() one branch under a job group named after it, set in the worker
+    because pool threads do not inherit the caller's local properties."""
+    name, df = branch
+    df.sparkSession.sparkContext.setJobGroup(name, name)
+    df.count()

@@ -42,29 +42,8 @@ def batch_processor(pipeline, sink_path: str):
     assert idempotence."""
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        mentions = pipeline.mentions(batch).cache()
-        surfaces = pipeline.surfaces(mentions)
-        resolved = pipeline.resolve(surfaces)
-        out = (
-            pipeline.mention_clusters(mentions, _trivial_clusters(surfaces))
-            .join(resolved.select("skey", "entity_id", "score"), "skey", "left")
-            .select(
-                "conv_id", "turn_idx", "start", "end", "mention",
-                "mention_id", "entity_id", "score",
-            )
-            .withColumn("epoch_id", F.lit(epoch_id))
-        )
-        # idempotent per epoch: dynamic partition overwrite replaces exactly
-        # the partitions present in this batch (= this epoch_id) on replay
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(sink_path)
-        )
-        mentions.unpersist()
+        if not batch.isEmpty():
+            _link_epoch(pipeline, batch, sink_path, epoch_id)
 
     return process
 
@@ -88,6 +67,31 @@ def _trivial_clusters(surfaces: DataFrame) -> DataFrame:
     """Within a micro-batch, clusters are per-surface (cross-batch clustering
     belongs to the periodic batch job; streams only resolve + accumulate)."""
     return surfaces.select(F.col("skey").alias("node"), F.col("skey").alias("cluster_id"))
+
+
+def _link_epoch(pipeline, turns: DataFrame, sink_path: str, epoch_id: int,
+                session_of: DataFrame | None = None) -> None:
+    """Write one epoch's resolved mentions, built from the stage graph up to
+    ``resolved`` (``mentions`` cached: it is read twice) over trivial clusters.
+    Dynamic partition overwrite makes a replayed epoch rewrite its partition."""
+
+    def per_epoch(stage, build):
+        return build().cache() if stage.name == "mentions" else build()
+
+    g = pipeline.build(turns, per_epoch, upto="resolved")
+    out = pipeline.resolved_mentions(
+        g["mentions"], _trivial_clusters(g["surfaces"]), g["resolved"]
+    ).drop("cluster_id")
+    if session_of is not None:
+        out = out.join(session_of, ["conv_id", "turn_idx"])
+    (
+        out.withColumn("epoch_id", F.lit(epoch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .parquet(sink_path)
+    )
+    g["mentions"].unpersist()
 
 
 def session_batch_processor(pipeline, transcripts_path: str, sink_path: str):
@@ -129,26 +133,7 @@ def session_batch_processor(pipeline, transcripts_path: str, sink_path: str):
         )
         turn_sess = in_sess.select("conv_id", "turn_idx", "session_id")
         member_turns = in_sess.select(*[f.name for f in turns.schema.fields])
-        mentions = pipeline.mentions(member_turns).cache()
-        surfaces = pipeline.surfaces(mentions)
-        resolved = pipeline.resolve(surfaces)
-        out = (
-            pipeline.mention_clusters(mentions, _trivial_clusters(surfaces))
-            .join(resolved.select("skey", "entity_id", "score"), "skey", "left")
-            .join(turn_sess, ["conv_id", "turn_idx"])
-            .select(
-                "conv_id", "turn_idx", "start", "end", "mention",
-                "mention_id", "session_id", "entity_id", "score",
-            )
-            .withColumn("epoch_id", F.lit(epoch_id))
-        )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(sink_path)
-        )
-        mentions.unpersist()
+        _link_epoch(pipeline, member_turns, sink_path, epoch_id, turn_sess)
 
     return process
 

@@ -31,6 +31,42 @@ def test_pairwise_f1_gate(run, tiny):
     assert 0.0 <= row["precision"] <= 1.0 and 0.0 <= row["recall"] <= 1.0
 
 
+def test_concurrent_branches_carry_job_groups(run, spark):
+    """run() populates scored and resolved from pool threads; each thread
+    sets its branch's job group itself, so both groups hold jobs."""
+    tracker = spark.sparkContext.statusTracker()
+    assert tracker.getJobIdsForGroup("scored")
+    assert tracker.getJobIdsForGroup("resolved")
+
+
+def test_run_and_run_linkage_agree_and_resume(run, spark, tiny, tmp_path):
+    """run() and run_linkage walk one stage graph, so their resolved mentions
+    hold the same rows. Deleting a committed stage's manifest rebuilds that
+    stage and every stage downstream of it; the others resume, and the
+    output does not change."""
+    import os
+
+    from entity_linkings_spark.plans.lifecycle import run_linkage
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    want = rows(run["resolved_mentions"])
+    assert len(want) == 286
+    root = str(tmp_path / "store")
+    first = run_linkage(spark, tiny["transcripts"], tiny["dictionary"], root, "tiny")
+    assert rows(first["resolved_mentions"].df) == want
+
+    store = first["runner"].store
+    os.remove(store._manifest("clusters", first["clusters"].snapshot_id))
+    again = run_linkage(spark, tiny["transcripts"], tiny["dictionary"], root, "tiny")
+    stages = [k for k in first if k != "runner"]
+    assert [k for k in again if k != "runner"] == stages
+    assert {k for k in stages if not again[k].resumed} == {"clusters", "resolved_mentions"}
+    assert all(again[k].snapshot_id == first[k].snapshot_id for k in stages)
+    assert rows(again["resolved_mentions"].df) == want
+
+
 def test_per_turn_text_invariant(run, tiny, tiny_paths, spark):
     """BASELINE input_hint: per-turn text equality under stable
     (conv_id, turn_idx) ordering — the pipeline never mutates its source."""

@@ -241,6 +241,26 @@ def test_epoch_replay_is_idempotent(spark, tiny, tmp_path):
     assert spark.read.parquet(sink).where("epoch_id = 7").count() == n1
 
 
+def test_epochs_hold_persisted_rdds_flat(spark, tiny, tmp_path):
+    """Epochs through one pipeline leave no persisted RDD behind: each epoch
+    unpersists the mentions it cached, and the prior cascade's dictionary
+    table is cached once per dictionary plan. RDDs are compared by id, since
+    the context cleaner may drop other tests' RDDs at any time."""
+    from entity_linkings_spark.streaming.incremental import batch_processor
+
+    process = batch_processor(LinkagePipeline(tiny["dictionary"]), str(tmp_path / "sink"))
+    convs = sorted(r[0] for r in tiny["transcripts"].select("conv_id").distinct().collect())
+
+    def persisted_after(epoch):
+        process(tiny["transcripts"].where(F.col("conv_id").isin(convs[epoch::4])), epoch)
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    after_first = persisted_after(0)
+    for epoch in range(1, 4):
+        ids = persisted_after(epoch)
+        assert ids <= after_first, f"epoch {epoch} left RDDs {ids - after_first} persisted"
+
+
 def test_sniffed_but_undecodable_falls_back_not_crashes(spark):
     """A payload that LOOKS like a known format but cannot decode (unsupported
     bpp, truncated raster, a fake payload starting 'BM') must honor the module
