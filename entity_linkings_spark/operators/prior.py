@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from entity_linkings_spark.functions.strings import norm_alnum, norm_despace, norm_exact
+from entity_linkings_spark.sources.dictionary import surface_forms
 
 
 def alias_tier_tables(alias_counts: DataFrame) -> dict[str, DataFrame]:
@@ -159,13 +160,5 @@ def dictionary_alias_counts(dic: DataFrame) -> DataFrame:
     """Derive an alias_counts-shaped table from the entity dictionary itself
     (name + aliases, count=1) — used when no mention-counter resource exists,
     and unioned with observed counts when it does."""
-    return (
-        dic.where(F.col("id") != "-1")
-        .select(
-            F.col("id").alias("entity_id"),
-            F.explode(
-                F.array_union(F.array(F.col("name")), F.coalesce("aliases", F.array()))
-            ).alias("mention"),
-        )
-        .withColumn("count", F.lit(1).cast("long"))
-    )
+    forms = surface_forms(dic).withColumnsRenamed({"id": "entity_id", "surface": "mention"})
+    return forms.withColumn("count", F.lit(1).cast("long"))

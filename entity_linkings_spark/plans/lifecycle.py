@@ -19,10 +19,10 @@ Two store implementations behind one interface:
     per stage and ``spark.read.table(tbl)`` on resume — the runner code is
     store-agnostic.
 
-Lineage/metrics: after each stage commit the runner appends per-partition
-rows (stage, snapshot_id, partition_id, rows_out, wall_ms) to a metrics
-table; reading any stage's history answers "which partitions produced what,
-in which snapshot" — the per-partition lineage of the north rule.
+Lineage/metrics: the commit observes the stage's row count, and per-partition
+rows (stage, snapshot_id, partition_id, rows_out, wall_ms) come from the
+committed parquet footers, one metrics file per snapshot: "which partitions
+produced what, in which snapshot" — the per-partition lineage of the north rule.
 """
 
 from __future__ import annotations
@@ -35,8 +35,12 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 METRICS_SCHEMA = (
     "stage string, snapshot_id string, partition_id int, rows_out long, wall_ms long"
@@ -231,31 +235,35 @@ class StageRunner:
         committed: a snapshot derived from a rebuilt input is stale."""
         snapshot_id = _fingerprint(stage, fingerprint)
         t0 = time.time()
-        df = build()
-        self.store.write(stage, snapshot_id, df)
+        obs = Observation()
+        self.store.write(stage, snapshot_id, build().observe(obs, F.count(F.lit(1)).alias("rows")))
         out = self.store.read(stage, snapshot_id)
         wall_ms = int((time.time() - t0) * 1000)
-        self._append_metrics(stage, snapshot_id, out, wall_ms)
-        rows = out.count()
+        rows = obs.get["rows"]
+        self._write_lineage(stage, snapshot_id, out, rows, wall_ms)
         self.events.append(
             {"stage": stage, "snapshot_id": snapshot_id, "resumed": False, "rows": rows}
         )
         return StageResult(out, snapshot_id, False, rows, wall_ms)
 
-    def _append_metrics(self, stage: str, snapshot_id: str, df: DataFrame, wall_ms: int):
-        """Per-partition lineage rows for the committed snapshot."""
-        parts = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows_out"))
-            .select(
-                F.lit(stage).alias("stage"),
-                F.lit(snapshot_id).alias("snapshot_id"),
-                "partition_id",
-                "rows_out",
-                F.lit(wall_ms).alias("wall_ms"),
-            )
-        )
-        parts.write.mode("append").parquet(self.metrics_dir)
+    def _write_lineage(self, stage: str, snapshot_id: str, out: DataFrame, rows: int, wall_ms: int):
+        """Lineage rows of the committed snapshot from its parquet footers, with
+        no Spark job; ``partition_id`` is the write task's part-NNNNN number.
+        Iceberg lists no files here: its ``files`` metadata table holds the
+        per-file record counts."""
+        parts = [
+            {"stage": stage, "snapshot_id": snapshot_id, "wall_ms": wall_ms,
+             "partition_id": int(os.path.basename(f).split("-")[1]),
+             "rows_out": pq.read_metadata(f).num_rows}
+            for f in sorted(out.inputFiles())
+        ]
+        if parts and sum(p["rows_out"] for p in parts) != rows:
+            raise RuntimeError(f"{stage} {snapshot_id}: footers disagree with {rows} rows written")
+        name = f"{stage}-{snapshot_id}.parquet"  # per snapshot: a rebuild replaces it
+        tmp = os.path.join(self.metrics_dir, "." + name)  # hidden from readers
+        schema = to_arrow_schema(StructType.fromDDL(METRICS_SCHEMA))
+        pq.write_table(pa.Table.from_pylist(parts, schema), tmp)
+        os.replace(tmp, os.path.join(self.metrics_dir, name))
 
     def metrics(self) -> DataFrame:
         return self.store.spark.read.schema(METRICS_SCHEMA).parquet(self.metrics_dir)
@@ -272,8 +280,8 @@ def run_linkage(
     """The full pipeline under the lifecycle runner: every stage committed as
     a snapshot; a rerun with the same ``input_fingerprint`` resumes every
     already-committed stage (kill-and-rerun safe) and rebuilds every stage
-    downstream of a rebuilt one. Stages run one at a time: concurrent appends
-    to the one ``_metrics`` path collide in the committer's ``_temporary``."""
+    downstream of a rebuilt one. Stages run one at a time until a measured
+    change makes independent ones commit concurrently."""
     from entity_linkings_spark.plans.pipeline import LinkageConfig, LinkagePipeline
 
     cfg = config or LinkageConfig()

@@ -126,7 +126,7 @@ class LinkagePipeline:
         self.dic = dic
         # dictionary-derived alias counts always participate; observed
         # mention-counter counts (S4) are unioned in when provided
-        derived = P.dictionary_alias_counts(dic)
+        self.dictionary_forms = derived = P.dictionary_alias_counts(dic)
         self.alias_counts = (
             derived.unionByName(alias_counts) if alias_counts is not None else derived
         )
@@ -320,8 +320,7 @@ class LinkagePipeline:
         fresh. Key derivation is per-row and deterministic, so the blocking
         semantics are identical either way (asserted in tests)."""
         dict_surfaces = (
-            P.dictionary_alias_counts(self.dic)
-            .select(
+            self.dictionary_forms.select(
                 F.lower(F.trim("mention")).alias("surface"),
                 F.col("entity_id"),
             )

@@ -55,7 +55,7 @@ def with_default_description(dic: DataFrame) -> DataFrame:
     )
 
 
-def _surface_forms(dic: DataFrame) -> DataFrame:
+def surface_forms(dic: DataFrame) -> DataFrame:
     """One row per known surface form (name + each alias), non-NIL."""
     return (
         dic.where(F.col("id") != NIL_ID)
@@ -86,7 +86,7 @@ def dictionary_token_sets(dic: DataFrame, min_len: int = 2) -> tuple[list[str], 
     dimension-table derivatives; collecting them separately costs two full
     dictionary-scan jobs where one suffices (the pipeline's per-job
     scheduling overhead is pure waste at any scale)."""
-    forms = _surface_forms(dic)
+    forms = surface_forms(dic)
     words = (
         forms.select(F.explode(tokenize("surface")).alias("tok"))
         .where(F.length("tok") >= min_len)

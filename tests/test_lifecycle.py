@@ -32,6 +32,85 @@ def test_stage_resume_and_metrics(spark, tmp_path):
     assert {r["n"] for r in rows} == {100}
 
 
+def _jobs(spark, group, action):
+    """Spark jobs ``action`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bookkeeping_adds_no_spark_job(spark, tmp_path):
+    """A fresh commit through the runner costs the store's write and its
+    read-back and nothing more: the write observes the row count, and the
+    lineage comes from the committed parquet footers."""
+    df = spark.range(1000).repartition(3)
+    store = SnapshotStore(spark, str(tmp_path / "s"))
+    bare = _jobs(spark, "bare-commit", lambda: (
+        store.write("st", "bare", df), store.read("st", "bare")))
+    runner = StageRunner(store)
+    res = {}
+    ran = _jobs(spark, "runner-commit", lambda: res.update(r=runner.run("st", "fp", lambda: df)))
+    assert ran <= bare
+    assert res["r"].rows == 1000
+    m = runner.metrics().where(F.col("snapshot_id") == res["r"].snapshot_id).collect()
+    assert sorted(r["partition_id"] for r in m) == [0, 1, 2]
+    assert sum(r["rows_out"] for r in m) == 1000
+
+
+def test_footers_disagreeing_with_the_write_raise(spark, tmp_path):
+    """The committed files must hold exactly the rows the write observed."""
+
+    class PaddingStore(SnapshotStore):
+        def write(self, stage, snapshot_id, df):
+            super().write(stage, snapshot_id, df.unionByName(spark.range(1)))
+
+    runner = StageRunner(PaddingStore(spark, str(tmp_path / "s")))
+    with pytest.raises(RuntimeError, match="footers disagree with 5 rows"):
+        runner.run("st", "fp", lambda: spark.range(5))
+
+
+def test_concurrent_commits_share_no_path(spark, tmp_path):
+    """Stages committed from more threads than cores into one store all
+    succeed, resume, and keep their lineage rows (each snapshot writes its
+    own lineage file)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    runner = StageRunner(SnapshotStore(spark, str(tmp_path / "s")))
+    sizes = {f"stage_{i}": 10 * (i + 1) for i in range(6)}
+
+    def commit(stage):
+        return runner.run(stage, "fp", lambda: spark.range(sizes[stage]))
+
+    with ThreadPoolExecutor(len(sizes)) as pool:
+        futures = {st: pool.submit(commit, st) for st in sizes}
+        results = {st: f.result(timeout=300) for st, f in futures.items()}
+    assert {st: r.rows for st, r in results.items()} == sizes
+    assert all(commit(st).resumed for st in sizes)
+    lineage = runner.metrics().groupBy("stage").agg(F.sum("rows_out").alias("n"))
+    assert {r["stage"]: r["n"] for r in lineage.collect()} == sizes
+
+
+def test_metrics_read_legacy_part_files(spark, tmp_path):
+    """A ``_metrics`` dir that also holds Spark-appended part files from the
+    older append-per-stage format still reads, next to per-snapshot files."""
+    from entity_linkings_spark.plans.lifecycle import METRICS_SCHEMA
+
+    runner = StageRunner(SnapshotStore(spark, str(tmp_path / "s")))
+    spark.createDataFrame(
+        [("old_stage", "0ld", 0, 7, 5), ("old_stage", "0ld", 1, 3, 5)], METRICS_SCHEMA
+    ).write.mode("append").parquet(runner.metrics_dir)
+    new = runner.run("st", "fp", lambda: spark.range(4))
+    got = runner.metrics().groupBy("stage", "snapshot_id").agg(F.sum("rows_out").alias("n"))
+    assert {(r["stage"], r["snapshot_id"], r["n"]) for r in got.collect()} == {
+        ("old_stage", "0ld", 10), ("st", new.snapshot_id, 4)
+    }
+
+
 def test_kill_and_rerun_identical(spark, tiny, tmp_path):
     """Simulated kill after two stages: rerun resumes them and the final
     output snapshot is identical (deterministic ids + deterministic data)."""

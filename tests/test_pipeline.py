@@ -65,6 +65,16 @@ def test_run_and_run_linkage_agree_and_resume(run, spark, tiny, tmp_path):
     assert {k for k in stages if not again[k].resumed} == {"clusters", "resolved_mentions"}
     assert all(again[k].snapshot_id == first[k].snapshot_id for k in stages)
     assert rows(again["resolved_mentions"].df) == want
+    # a rebuild replaces its snapshot's lineage rows instead of adding a set
+    lineage = again["runner"].metrics().groupBy("stage", "snapshot_id").agg(
+        F.sum("rows_out").alias("rows"),
+        (F.count("*") - F.countDistinct("partition_id")).alias("dup_partitions"),
+    )
+    got = {r["stage"]: (r["snapshot_id"], r["rows"], r["dup_partitions"])
+           for r in lineage.collect()}
+    assert {k: got[k] for k in stages} == {
+        k: (first[k].snapshot_id, first[k].rows, 0) for k in stages
+    }
 
 
 def test_per_turn_text_invariant(run, tiny, tiny_paths, spark):
