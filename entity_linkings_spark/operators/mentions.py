@@ -87,9 +87,9 @@ def extract_mentions(
 ) -> DataFrame:
     """(conv_id, turn_idx, start, end, mention, mention_id) per detected span.
 
-    ``dict_tokens``: lowercase anchor token set (sources.dictionary.
-    dictionary_token_set). ``abbrev_tokens``: tokens whose trailing '.' is
-    part of the surface form (sources.dictionary.abbrev_dot_tokens).
+    ``dict_tokens`` and ``abbrev_tokens``: the lowercase anchor tokens and the
+    tokens whose trailing '.' is part of the surface form, in that order the
+    two lists of ``sources.dictionary.dictionary_token_sets``.
     """
     abbrev_tokens = abbrev_tokens or []
 

@@ -23,37 +23,47 @@ from pyspark.sql import functions as F
 from entity_linkings_spark.functions.strings import norm_alnum, norm_despace, norm_exact
 from entity_linkings_spark.sources.dictionary import surface_forms
 
+# The probe cascade in order: each tier's name and the normalizer that keys it.
+TIERS = (("exact", norm_exact), ("despace", norm_despace), ("alnum", norm_alnum))
+
+
+def _summed(keyed: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, entity_id, count) with counts summed on collision, exactly as
+    the reference merges colliding simplified mentions; empty keys dropped."""
+    return (
+        keyed.where(F.length("key") > 0)
+        .groupBy(*keys, "entity_id")
+        .agg(F.sum("count").alias("count"))
+    )
+
+
+def _best(counts: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, entity_id, prior): argmax-count entity per group with its
+    normalized prior = count / total count of the group."""
+    w = Window.partitionBy(*keys)
+    wo = w.orderBy(F.desc("count"), F.asc("entity_id"))  # deterministic ties
+    return (
+        counts.withColumn("rn", F.row_number().over(wo))
+        .withColumn("total", F.sum("count").over(w))
+        .where(F.col("rn") == 1)
+        .select(*keys, "entity_id", (F.col("count") / F.col("total")).alias("prior"))
+    )
+
 
 def alias_tier_tables(alias_counts: DataFrame) -> dict[str, DataFrame]:
     """Three normalized aggregates of (mention, entity_id, count): exact
-    (trimmed lowercase), despaced, alnum-only — counts summed on collision
-    exactly as the reference merges colliding simplified mentions."""
-    tiers = {}
-    for name, norm in (
-        ("exact", norm_exact("mention")),
-        ("despace", norm_despace("mention")),
-        ("alnum", norm_alnum("mention")),
-    ):
-        tiers[name] = (
-            alias_counts.select(norm.alias("key"), "entity_id", "count")
-            .where(F.length("key") > 0)
-            .groupBy("key", "entity_id")
-            .agg(F.sum("count").alias("count"))
-        )
-    return tiers
+    (trimmed lowercase), despaced, alnum-only; one aggregation per tier, so
+    a caller that reads one tier aggregates only that tier."""
+    return {
+        t: _summed(alias_counts.select(norm("mention").alias("key"), "entity_id", "count"), "key")
+        for t, norm in TIERS
+    }
 
 
 def best_entity_per_key(tier: DataFrame) -> DataFrame:
     """(key, entity_id, prior): argmax-count entity per key with its
     normalized prior = count / total count for the key."""
-    w = Window.partitionBy("key")
-    wo = w.orderBy(F.desc("count"), F.asc("entity_id"))  # deterministic ties
-    return (
-        tier.withColumn("rn", F.row_number().over(wo))
-        .withColumn("total", F.sum("count").over(w))
-        .where(F.col("rn") == 1)
-        .select("key", "entity_id", (F.col("count") / F.col("total")).alias("prior"))
-    )
+    return _best(tier, "key")
 
 
 def topk_prior(alias_counts: DataFrame, k: int) -> DataFrame:
@@ -72,88 +82,44 @@ def topk_prior(alias_counts: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _tiered_best(alias_counts: DataFrame) -> DataFrame:
-    """All three tiers' argmax tables in ONE pass over the alias dimension:
-    (tier, key, entity_id, prior), numerically identical to running
-    ``best_entity_per_key(alias_tier_tables(...)[t])`` per tier — the explode
-    adds ``tier`` to every group/partition key, so the per-group sums, the
-    deterministic tie-break and the prior normalization see exactly the same
-    groups. One aggregation exchange + one window exchange replace the six of
-    the per-tier shape (guide §2.4), and the cache makes the three broadcast
-    probes build from the same materialized rows instead of re-aggregating
-    the dimension three times."""
-    tiered = (
-        alias_counts.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("exact").alias("tier"),
-                        norm_exact("mention").alias("key"),
-                    ),
-                    F.struct(
-                        F.lit("despace").alias("tier"),
-                        norm_despace("mention").alias("key"),
-                    ),
-                    F.struct(
-                        F.lit("alnum").alias("tier"),
-                        norm_alnum("mention").alias("key"),
-                    ),
-                )
-            ).alias("tk"),
-            "entity_id",
-            "count",
-        )
-        .select(F.col("tk.tier").alias("tier"), F.col("tk.key").alias("key"),
-                "entity_id", "count")
-        .where(F.length("key") > 0)
-        .groupBy("tier", "key", "entity_id")
-        .agg(F.sum("count").alias("count"))
-    )
-    w = Window.partitionBy("tier", "key")
-    wo = w.orderBy(F.desc("count"), F.asc("entity_id"))
-    return (
-        tiered.withColumn("rn", F.row_number().over(wo))
-        .withColumn("total", F.sum("count").over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "tier", "key", "entity_id",
-            (F.col("count") / F.col("total")).alias("prior"),
-        )
-        .cache()
+def prior_table(alias_counts: DataFrame) -> DataFrame:
+    """(tier, key, entity_id, prior): every tier's argmax table, equal to
+    ``best_entity_per_key(alias_tier_tables(...)[tier])`` per tier, from one
+    aggregation exchange and one window exchange instead of six: the explode
+    adds ``tier`` to every group key, so each tier sums its own groups. Lazy;
+    an owner that probes it repeatedly persists it (LinkagePipeline does)."""
+    keyed = F.array(*[F.struct(F.lit(t).alias("tier"), norm("mention").alias("key"))
+                      for t, norm in TIERS])
+    tiered = alias_counts.select(F.explode(keyed).alias("tk"), "entity_id", "count")
+    return _best(_summed(tiered.select("tk.tier", "tk.key", "entity_id", "count"),
+                         "tier", "key"), "tier", "key")
+
+
+def probe_prior(surfaces: DataFrame, table: DataFrame) -> DataFrame:
+    """Probe cascade over a ``prior_table`` (broadcast left joins + coalesce):
+    adds (prior_entity, prior_score, prior_tier) to a surface table; NULL
+    entity = no dictionary evidence (the NIL-ish outcome of the exact probes,
+    entity_dictionary.py:51-57)."""
+    # every probe reads the whole table keyed "tier:key", so the three build
+    # sides are one plan: Spark aggregates and broadcasts it once
+    keyed = table.select(F.concat("tier", F.lit(":"), "key").alias("tk"), "entity_id", "prior")
+    out = surfaces
+    for t, norm in TIERS:
+        hit = keyed.withColumnsRenamed({"tk": f"k_{t}", "entity_id": f"e_{t}", "prior": f"p_{t}"})
+        probe = F.concat(F.lit(f"{t}:"), norm("surface"))
+        out = out.join(F.broadcast(hit), probe == hit[f"k_{t}"], "left").drop(f"k_{t}")
+    return out.select(
+        *surfaces.columns,
+        F.coalesce(*[F.col(f"e_{t}") for t, _ in TIERS]).alias("prior_entity"),
+        F.coalesce(*[F.col(f"p_{t}") for t, _ in TIERS]).alias("prior_score"),
+        F.coalesce(*[F.when(F.col(f"e_{t}").isNotNull(), F.lit(t)) for t, _ in TIERS])
+        .alias("prior_tier"),
     )
 
 
 def resolve_by_prior(surfaces: DataFrame, alias_counts: DataFrame) -> DataFrame:
-    """Probe cascade over the three tiers (broadcast left joins + coalesce):
-    adds (prior_entity, prior_score, prior_tier) to a surface table; NULL
-    entity = no dictionary evidence (the NIL-ish outcome of the exact probes,
-    entity_dictionary.py:51-57)."""
-    best = _tiered_best(alias_counts)
-    tiers = {
-        name: best.where(F.col("tier") == name).drop("tier")
-        for name in ("exact", "despace", "alnum")
-    }
-    out = surfaces
-    for name, norm in (
-        ("exact", norm_exact("surface")),
-        ("despace", norm_despace("surface")),
-        ("alnum", norm_alnum("surface")),
-    ):
-        t = tiers[name].select(
-            F.col("key").alias(f"k_{name}"),
-            F.col("entity_id").alias(f"e_{name}"),
-            F.col("prior").alias(f"p_{name}"),
-        )
-        out = out.join(F.broadcast(t), norm == t[f"k_{name}"], "left").drop(f"k_{name}")
-    return out.select(
-        *surfaces.columns,
-        F.coalesce("e_exact", "e_despace", "e_alnum").alias("prior_entity"),
-        F.coalesce("p_exact", "p_despace", "p_alnum").alias("prior_score"),
-        F.when(F.col("e_exact").isNotNull(), "exact")
-        .when(F.col("e_despace").isNotNull(), "despace")
-        .when(F.col("e_alnum").isNotNull(), "alnum")
-        .alias("prior_tier"),
-    )
+    """``probe_prior`` over the ``prior_table`` of ``alias_counts``."""
+    return probe_prior(surfaces, prior_table(alias_counts))
 
 
 def dictionary_alias_counts(dic: DataFrame) -> DataFrame:

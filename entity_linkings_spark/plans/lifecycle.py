@@ -281,7 +281,9 @@ def run_linkage(
     a snapshot; a rerun with the same ``input_fingerprint`` resumes every
     already-committed stage (kill-and-rerun safe) and rebuilds every stage
     downstream of a rebuilt one. Stages run one at a time until a measured
-    change makes independent ones commit concurrently."""
+    change makes independent ones commit concurrently. The pipeline's
+    dictionary state is built only by stages that rebuild, and released on
+    return."""
     from entity_linkings_spark.plans.pipeline import LinkageConfig, LinkagePipeline
 
     cfg = config or LinkageConfig()
@@ -298,6 +300,9 @@ def run_linkage(
         results[stage.name] = run(stage.name, fp, build)
         return results[stage.name].df
 
-    pipe.build(transcripts, durable)
+    try:
+        pipe.build(transcripts, durable)
+    finally:
+        pipe.close()
     del results["blocking_keys"]  # not among the return keys
     return {"runner": runner, **results}

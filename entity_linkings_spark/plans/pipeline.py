@@ -40,7 +40,7 @@ from __future__ import annotations
 from collections import namedtuple
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from functools import partial
+from functools import cached_property, partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -64,7 +64,6 @@ class LinkageConfig:
     rows_per_band: int = 4
     match_threshold: float = 0.90  # NIL-NIL string-edge threshold
     resolve_threshold: float = 0.62  # argmax-vs-dictionary acceptance
-    min_token_len: int = 2
     hot_block_threshold: int = 256  # triangle-salt blocks hotter than this
     n_salt: int = 8
     use_idf: bool = False  # corpus-IDF-weighted ngram cosine (thresholds are
@@ -118,7 +117,13 @@ STAGES = (
 
 class LinkagePipeline:
     """Composable stage plans. Every method returns a DataFrame (lazy); the
-    lifecycle runner materializes stage outputs as snapshots."""
+    lifecycle runner materializes stage outputs as snapshots.
+
+    The pipeline owns the state it derives from the dictionary (the anchor
+    token sets, the prior table, the keyed dictionary surfaces): each is built
+    on first use, reused by every later call and stream epoch, and released by
+    ``close()``, which ``run()`` and ``run_linkage`` run themselves and a
+    stream's caller runs when the query ends."""
 
     def __init__(self, dic: DataFrame, alias_counts: DataFrame | None = None,
                  config: LinkageConfig | None = None):
@@ -131,14 +136,50 @@ class LinkagePipeline:
             derived.unionByName(alias_counts) if alias_counts is not None else derived
         )
 
+    # ---- dictionary state: built on first use, released by close() ----------
+    @cached_property
+    def token_sets(self) -> tuple[list[str], list[str]]:
+        """(word tokens, abbrev-dot tokens) that anchor mention extraction."""
+        return dictionary_token_sets(self.dic)
+
+    def _cached(self, name: str, build) -> DataFrame:
+        """The table ``build()`` makes, kept as ``name`` and cached. Spark keys
+        a cache by plan, so pipelines over the same dictionary and alias counts
+        share it and one's ``close()`` uncaches it for all: a use re-caches it."""
+        df = self.__dict__.get(name)
+        if df is None:
+            df = self.__dict__[name] = build()
+        if not df.storageLevel.useMemory:
+            df.cache()
+        return df
+
+    def _dictionary_keys(self) -> DataFrame:
+        """(skey, surface, entity_id, block_key): each distinct lowercase
+        dictionary surface form of each entity, once per uncapped block key."""
+        forms = (
+            self.dictionary_forms.select(F.lower(F.trim("mention")).alias("surface"), "entity_id")
+            .distinct()
+            .withColumn("skey", F.md5("surface"))
+        )
+        keys = B.surface_block_keys(forms.select("skey", "surface").distinct(),
+                                    self.cfg.num_bands, self.cfg.rows_per_band)
+        return keys.join(forms, ["skey", "surface"])
+
+    def close(self) -> None:
+        """Release the dictionary state built so far; a later use rebuilds it."""
+        for name in ("token_sets", "prior_table", "dictionary_keys"):
+            state = self.__dict__.pop(name, None)
+            if isinstance(state, DataFrame):
+                state.unpersist()
+
     # ---- stage 1: mentions --------------------------------------------------
     def mentions(self, transcripts: DataFrame) -> DataFrame:
-        toks, abbrevs = dictionary_token_sets(self.dic)
-        return extract_mentions(transcripts, toks, abbrevs)
+        return extract_mentions(transcripts, *self.token_sets)
 
     # ---- stage 2: distinct surfaces + prior evidence ------------------------
     def surfaces(self, mentions: DataFrame) -> DataFrame:
-        return P.resolve_by_prior(B.distinct_surfaces(mentions), self.alias_counts)
+        table = self._cached("prior_table", lambda: P.prior_table(self.alias_counts))
+        return P.probe_prior(B.distinct_surfaces(mentions), table)
 
     # ---- stage 3: blocking --------------------------------------------------
     def surface_keys(self, surfaces: DataFrame) -> DataFrame:
@@ -316,45 +357,36 @@ class LinkagePipeline:
 
         ``keys``: precomputed surface_keys() for the mention surfaces — the
         mention side reuses them (filtered to unresolved surfaces) instead of
-        re-deriving token+LSH keys; only the small dictionary side is keyed
-        fresh. Key derivation is per-row and deterministic, so the blocking
-        semantics are identical either way (asserted in tests)."""
-        dict_surfaces = (
-            self.dictionary_forms.select(
-                F.lower(F.trim("mention")).alias("surface"),
-                F.col("entity_id"),
-            )
-            .distinct()
-            .withColumn("skey", F.md5("surface"))
-        )
-        need = surfaces.where(F.col("prior_entity").isNull()).select("skey", "surface")
+        re-deriving token+LSH keys; the dictionary side is the pipeline's
+        cached ``_dictionary_keys``. Key derivation is per-row and
+        deterministic, so the blocking semantics are identical either way
+        (asserted in tests)."""
+        need = surfaces.where(F.col("prior_entity").isNull()).select("skey")
 
         # block mention surfaces against dictionary surfaces: reused mention
-        # keys (semi-joined to the unresolved subset) + fresh dictionary keys
+        # keys (semi-joined to the unresolved subset) + the dictionary's keys
         mention_keys = keys if keys is not None else self.surface_keys(surfaces)
-        mk = mention_keys.join(need.select("skey"), "skey").withColumn(
-            "side", F.lit("m")
+        mk = mention_keys.join(need, "skey").withColumn("side", F.lit("m"))
+        dk = self._cached("dictionary_keys", self._dictionary_keys).withColumn("side", F.lit("d"))
+        keys = B.cap_blocks(
+            mk.unionByName(dk, allowMissingColumns=True), self.cfg.max_block_size * 2
         )
-        dk = B.surface_block_keys(
-            dict_surfaces.select("skey", "surface"),
-            self.cfg.num_bands,
-            self.cfg.rows_per_band,
-        ).withColumn("side", F.lit("d"))
-        keys = B.cap_blocks(mk.unionByName(dk), self.cfg.max_block_size * 2)
         m = keys.where(F.col("side") == "m").select(
             "block_key", F.col("skey").alias("skey_a"), F.col("surface").alias("surface_a")
         )
         d = keys.where(F.col("side") == "d").select(
-            "block_key", F.col("skey").alias("skey_b"), F.col("surface").alias("surface_b")
+            "block_key", F.col("skey").alias("skey_b"), F.col("surface").alias("surface_b"),
+            "entity_id",
         )
+        # a dictionary surface keeps one row per entity through the cap, so
+        # it counts once per entity toward a block's size; it is scored once
         cand = (
             m.join(d, "block_key")
             .groupBy("skey_a", "skey_b")
-            .agg(F.first("surface_a").alias("surface_a"), F.first("surface_b").alias("surface_b"))
+            .agg(F.first("surface_a").alias("surface_a"), F.first("surface_b").alias("surface_b"),
+                 F.collect_set("entity_id").alias("entities"))
         )
-        scored = S.score_pairs_combined(cand).join(
-            dict_surfaces.select(F.col("skey").alias("skey_b"), "entity_id"), "skey_b"
-        )
+        scored = S.score_pairs_combined(cand).withColumn("entity_id", F.explode("entities"))
         w = Window.partitionBy("skey_a").orderBy(F.desc("combined"), F.asc("entity_id"))
         best = (
             scored.withColumn("rn", F.row_number().over(w))
@@ -438,8 +470,12 @@ class LinkagePipeline:
     def run(self, transcripts: DataFrame) -> dict[str, DataFrame]:
         """The whole graph through ``InMemory``, ``resolved_mentions`` in T6
         stable order. Its lazy localCheckpoints are lost on executor loss or
-        dynamic-allocation scale-in; resilient runs use ``run_linkage``."""
-        out = self.build(transcripts, InMemory())
+        dynamic-allocation scale-in; resilient runs use ``run_linkage``. The
+        dictionary state is released on return."""
+        try:
+            out = self.build(transcripts, InMemory())
+        finally:
+            self.close()  # every stage that read the state is checkpointed
         del out["blocking_keys"]
         out["resolved_mentions"] = out["resolved_mentions"].orderBy("conv_id", "turn_idx", "start")
         if self.cfg.golden:

@@ -3,8 +3,6 @@ scan with NIL append, alias-count scan, and the snapshot store used as the
 stage sink (Iceberg on a real cluster, atomic parquet snapshots here)."""
 
 from entity_linkings_spark.sources.dictionary import (
-    abbrev_dot_tokens,
-    dictionary_token_set,
     dictionary_token_sets,
     load_dictionary,
     with_nil_row,
@@ -15,8 +13,6 @@ from entity_linkings_spark.sources.transcripts import (
 )
 
 __all__ = [
-    "abbrev_dot_tokens",
-    "dictionary_token_set",
     "dictionary_token_sets",
     "load_dictionary",
     "with_nil_row",

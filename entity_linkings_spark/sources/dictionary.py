@@ -68,24 +68,19 @@ def surface_forms(dic: DataFrame) -> DataFrame:
     )
 
 
-def dictionary_token_set(dic: DataFrame, min_len: int = 2) -> list[str]:
-    """All distinct lowercase word tokens of names+aliases, length >= min_len
-    (single-char tokens like the 'A' of 'A. Tanaka' would make every article
-    an anchor — initials are handled by the extractor's initial-dot rule).
-
-    Thin wrapper over dictionary_token_sets so the extraction expression has
-    exactly ONE definition (the pipeline uses the fused form; a divergence
-    between the two would silently change the anchor set).
-    """
-    return dictionary_token_sets(dic, min_len)[0]
-
-
 def dictionary_token_sets(dic: DataFrame, min_len: int = 2) -> tuple[list[str], list[str]]:
-    """(word tokens, abbrev-dot tokens) in ONE Spark action — the fused form
-    of dictionary_token_set + abbrev_dot_tokens. Both are tiny
-    dimension-table derivatives; collecting them separately costs two full
-    dictionary-scan jobs where one suffices (the pipeline's per-job
-    scheduling overhead is pure waste at any scale)."""
+    """(word tokens, abbrev-dot tokens) of the dictionary's surface forms, in
+    ONE Spark action.
+
+    Word tokens: all distinct lowercase word tokens of names+aliases, length
+    >= min_len (single-char tokens like the 'A' of 'A. Tanaka' would make
+    every article an anchor — initials are handled by the extractor's
+    initial-dot rule).
+
+    Abbrev-dot tokens: lowercase tokens that appear immediately before a '.'
+    inside any surface form (e.g. 'Sys' of 'Acme Sys.', 'A' of 'A. Tanaka').
+    The extractor extends a mention span over a trailing '.' only for these,
+    so sentence-final periods are never swallowed."""
     forms = surface_forms(dic)
     words = (
         forms.select(F.explode(tokenize("surface")).alias("tok"))
@@ -103,14 +98,3 @@ def dictionary_token_sets(dic: DataFrame, min_len: int = 2) -> tuple[list[str], 
         sorted(r["tok"] for r in rows if r["kind"] == "w"),
         sorted(r["tok"] for r in rows if r["kind"] == "a"),
     )
-
-
-def abbrev_dot_tokens(dic: DataFrame) -> list[str]:
-    """Lowercase tokens that appear immediately before a '.' inside any
-    dictionary surface form (e.g. 'Sys' of 'Acme Sys.', 'A' of 'A. Tanaka').
-    The extractor extends a mention span over a trailing '.' only for these,
-    so sentence-final periods are never swallowed.
-
-    Thin wrapper over dictionary_token_sets (single definition, see
-    dictionary_token_set)."""
-    return dictionary_token_sets(dic)[1]

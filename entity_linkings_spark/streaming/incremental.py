@@ -39,7 +39,8 @@ def stream_transcripts(spark: SparkSession, path: str, max_files: int = 10) -> D
 def batch_processor(pipeline, sink_path: str):
     """The foreachBatch function: extract -> surfaces -> resolve -> write the
     epoch's partition. Exposed standalone so tests can replay an epoch and
-    assert idempotence."""
+    assert idempotence. Every epoch reuses ``pipeline``'s dictionary state;
+    call ``pipeline.close()`` when the query ends."""
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         if not batch.isEmpty():
@@ -55,7 +56,8 @@ def incremental_linkage(
     checkpoint_path: str,
 ):
     """foreachBatch micro-batch linkage. Returns the StreamingQuery builder
-    (caller starts/awaits)."""
+    (caller starts/awaits, then calls ``pipeline.close()`` when the query
+    ends)."""
     return (
         stream.writeStream.foreachBatch(batch_processor(pipeline, sink_path))
         .option("checkpointLocation", checkpoint_path)
@@ -84,14 +86,16 @@ def _link_epoch(pipeline, turns: DataFrame, sink_path: str, epoch_id: int,
     ).drop("cluster_id")
     if session_of is not None:
         out = out.join(session_of, ["conv_id", "turn_idx"])
-    (
-        out.withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(sink_path)
-    )
-    g["mentions"].unpersist()
+    try:
+        (
+            out.withColumn("epoch_id", F.lit(epoch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch_id")
+            .parquet(sink_path)
+        )
+    finally:
+        g["mentions"].unpersist()
 
 
 def session_batch_processor(pipeline, transcripts_path: str, sink_path: str):
@@ -151,7 +155,7 @@ def sessionized_linkage(
     sessionization (applyInPandasWithState, bounded per-conversation state)
     -> per-closed-session mention extraction + resolution (foreachBatch,
     epoch-idempotent sink). Returns the DataStreamWriter (caller
-    starts/awaits)."""
+    starts/awaits, then calls ``pipeline.close()`` when the query ends)."""
     from entity_linkings_spark.streaming.sessions import sessionize_stream
 
     events = stream.select(F.col("conv_id").alias("user_id"), "ts")

@@ -6,7 +6,7 @@ import pyspark.sql.functions as F
 from entity_linkings_spark.operators import blocking as B
 from entity_linkings_spark.operators.evaluate import gold_surface_pairs
 from entity_linkings_spark.operators.mentions import extract_mentions
-from entity_linkings_spark.sources.dictionary import abbrev_dot_tokens, dictionary_token_set
+from entity_linkings_spark.sources.dictionary import dictionary_token_sets
 
 
 def _surfaces(spark, rows):
@@ -52,8 +52,8 @@ def test_lsh_bands_pair_similar_strings(spark):
 def test_blocking_recall_on_tiny(tiny):
     m = extract_mentions(
         tiny["transcripts"],
-        dictionary_token_set(tiny["dictionary"]),
-        abbrev_dot_tokens(tiny["dictionary"]),
+        dictionary_token_sets(tiny["dictionary"])[0],
+        dictionary_token_sets(tiny["dictionary"])[1],
     )
     sf = B.distinct_surfaces(m)
     cand = B.blocking_pairs(sf).select("skey_a", "skey_b")

@@ -6,16 +6,13 @@ import datetime as dt
 import pyspark.sql.functions as F
 
 from entity_linkings_spark.operators.mentions import extract_mentions
-from entity_linkings_spark.sources.dictionary import (
-    abbrev_dot_tokens,
-    dictionary_token_set,
-)
+from entity_linkings_spark.sources.dictionary import dictionary_token_sets
 from entity_linkings_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
 def test_extraction_matches_gold_exactly(tiny):
-    toks = dictionary_token_set(tiny["dictionary"])
-    ab = abbrev_dot_tokens(tiny["dictionary"])
+    toks = dictionary_token_sets(tiny["dictionary"])[0]
+    ab = dictionary_token_sets(tiny["dictionary"])[1]
     m = extract_mentions(tiny["transcripts"], toks, ab)
     j = m.join(tiny["gold"], ["conv_id", "turn_idx", "start", "end"], "full_outer")
     assert j.where(F.col("mention").isNull()).count() == 0  # no missed gold
@@ -26,8 +23,8 @@ def test_extraction_slices_match_text(tiny):
     # the (start, end) offsets must slice exactly the reported mention string
     m = extract_mentions(
         tiny["transcripts"],
-        dictionary_token_set(tiny["dictionary"]),
-        abbrev_dot_tokens(tiny["dictionary"]),
+        dictionary_token_sets(tiny["dictionary"])[0],
+        dictionary_token_sets(tiny["dictionary"])[1],
     )
     j = m.join(tiny["transcripts"].select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"])
     bad = j.where(

@@ -629,3 +629,119 @@ def test_run_output_plans_stay_lineage_truncated(run):
     # re-analyzed subtrees re-reading the transcript source
     assert "LogicalRDD" in plan
     assert "parquet" not in plan.lower()
+
+
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _left_persisted(spark, before):
+    """RDD ids persisted now and not in ``before``, lazy local checkpoints
+    aside: those cut lineage (connected components takes one of its edge
+    frontier) and the context cleaner drops them once their frame is garbage,
+    whereas a cache stays until its owner releases it."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {i for i in set(rdds.keySet()) - before
+            if not rdds.get(i).rdd().isLocallyCheckpointed()}
+
+
+def _own_dictionary(spark, tiny, tmp_path):
+    """The tiny dictionary under a plan no other test has cached, so the
+    cache manager cannot share its derived state with another pipeline's."""
+    path = str(tmp_path / "dictionary")
+    tiny["dictionary"].write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_run_linkage_leaves_nothing_persisted(spark, tiny, tmp_path):
+    from entity_linkings_spark.plans.lifecycle import run_linkage
+
+    dic = _own_dictionary(spark, tiny, tmp_path)
+    before = _persisted(spark)
+    run_linkage(spark, tiny["transcripts"], dic, str(tmp_path / "store"), "tiny")
+    left = _left_persisted(spark, before)
+    assert not left, f"run_linkage left RDDs {left} persisted"
+
+
+def test_close_releases_the_dictionary_state(spark, tiny, tmp_path):
+    pipe = LinkagePipeline(_own_dictionary(spark, tiny, tmp_path))
+    before = _persisted(spark)
+    surfaces = pipe.surfaces(pipe.mentions(tiny["transcripts"]))
+    pipe.resolve(surfaces).count()
+    assert _persisted(spark) - before, "the pipeline persisted nothing"
+    pipe.close()
+    left = _left_persisted(spark, before)
+    assert not left, f"close() left RDDs {left} persisted"
+
+
+def test_resumed_run_linkage_derives_no_dictionary_state(spark, tiny, tmp_path, monkeypatch):
+    from entity_linkings_spark.operators import blocking as B
+    from entity_linkings_spark.operators import prior as P
+    from entity_linkings_spark.plans import pipeline
+    from entity_linkings_spark.plans.lifecycle import run_linkage
+
+    root = str(tmp_path / "store")
+    run_linkage(spark, tiny["transcripts"], tiny["dictionary"], root, "tiny")
+    calls = []
+    for mod, name in ((pipeline, "dictionary_token_sets"), (P, "prior_table"),
+                      (B, "surface_block_keys")):
+        monkeypatch.setattr(mod, name, lambda *a, _n=name, **k: calls.append(_n))
+    again = run_linkage(spark, tiny["transcripts"], tiny["dictionary"], root, "tiny")
+    assert all(r.resumed for k, r in again.items() if k != "runner")
+    assert calls == []
+
+
+def test_ambiguous_dictionary_surface_counts_per_entity_at_the_cap(spark):
+    """A dictionary surface shared by two entities counts once per entity
+    toward the size of a resolve block: with max_block_size=1 (resolve caps
+    blocks at 2) every block holding the typo and the shared surface holds 3
+    rows and is dropped, so the typo stays NIL; with max_block_size=2 the
+    blocks survive and the tie between the two entities goes to the smaller
+    id."""
+    from entity_linkings_spark.plans.pipeline import LinkageConfig
+    from entity_linkings_spark.sources.dictionary import DICTIONARY_SCHEMA
+
+    dic = spark.createDataFrame(
+        [("E1", "Acme Corporation", None, []),
+         ("E2", "Orion Group", None, ["Acme Corporation"])],
+        schema=DICTIONARY_SCHEMA,
+    )
+    mentions = spark.createDataFrame([("acme corporaton",)], "mention string")
+    got = {}
+    for size in (1, 2):
+        pipe = LinkagePipeline(dic, config=LinkageConfig(max_block_size=size))
+        try:
+            [row] = pipe.resolve(pipe.surfaces(mentions)).collect()
+        finally:
+            pipe.close()
+        got[size] = (row["entity_id"], row["score"] > 0.62)
+    assert got == {1: ("-1", False), 2: ("E1", True)}
+
+
+def test_run_leaves_no_cache(spark, tiny, tmp_path):
+    """run() releases the dictionary state once its stages are checkpointed."""
+    pipe = LinkagePipeline(_own_dictionary(spark, tiny, tmp_path))
+    before = _persisted(spark)
+    out = pipe.run(tiny["transcripts"])
+    assert out["resolved_mentions"].count() > 0
+    left = _left_persisted(spark, before)
+    assert not left, f"run() left RDDs {left} persisted"
+
+
+def test_a_peer_close_leaves_a_live_pipeline_cached(spark, tiny, tmp_path):
+    """Two pipelines over one dictionary share Spark's cache entries, so one's
+    close() uncaches them; the other's next use caches them again, and its
+    own close() releases them."""
+    dic = _own_dictionary(spark, tiny, tmp_path)
+    turns = tiny["transcripts"]
+    a, b = LinkagePipeline(dic), LinkagePipeline(dic)
+    before = _persisted(spark)
+    for pipe in (a, b):
+        pipe.resolve(pipe.surfaces(pipe.mentions(turns))).count()
+    a.close()
+    assert not _left_persisted(spark, before)
+    b.resolve(b.surfaces(b.mentions(turns))).count()
+    assert len(_left_persisted(spark, before)) == 2  # prior table, dictionary keys
+    b.close()
+    left = _left_persisted(spark, before)
+    assert not left, f"close() left RDDs {left} persisted"

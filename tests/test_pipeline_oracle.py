@@ -10,10 +10,10 @@ def test_part_dictionary_has_no_abbrev_dot_tokens(spark):
     abbreviation-dot surface forms (the extractor's abbrev-dot extension is
     a no-op); if part names ever grow dots this must fail loudly."""
     import __spark_entry__ as E
-    from entity_linkings_spark.sources.dictionary import abbrev_dot_tokens
+    from entity_linkings_spark.sources.dictionary import dictionary_token_sets
 
     dic = E._part_dictionary(spark, "/root/testdata/sf0.001")
-    assert abbrev_dot_tokens(dic) == []
+    assert dictionary_token_sets(dic)[1] == []
 
 
 @pytest.mark.parametrize("sf", ["0.001"])

@@ -286,3 +286,13 @@ def test_one_to_one_round_combines_map_side(spark):
     # output, never raw edges: the partial agg appears before its exchange
     first_partial = p.index("partial_min_by")
     assert "min_by" in p[:first_partial], "final agg should sit above partial"
+
+
+def test_prior_cascade_broadcasts_its_table_once(spark):
+    """J4's three probe joins read one prior table keyed by tier: Spark
+    aggregates and broadcasts it once, and the other two probes reuse that
+    exchange (the final adaptive plan shows the reuse)."""
+    df = QUERIES["j4_prior_cascade"](spark, SF)
+    df.collect()
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("ReusedExchange") == 2

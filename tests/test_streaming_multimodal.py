@@ -7,7 +7,7 @@ import pytest
 
 from entity_linkings_spark.operators import multimodal as M
 from entity_linkings_spark.plans.pipeline import LinkagePipeline
-from entity_linkings_spark.sources.dictionary import dictionary_token_set
+from entity_linkings_spark.sources.dictionary import dictionary_token_sets
 from entity_linkings_spark.streaming.incremental import (
     incremental_linkage,
     stream_transcripts,
@@ -106,7 +106,7 @@ def test_sessionized_linkage_two_layers_end_to_end(spark, tiny, tmp_path):
 
 
 def test_windowed_mention_counts(spark, tiny, tmp_path):
-    toks = dictionary_token_set(tiny["dictionary"])
+    toks = dictionary_token_sets(tiny["dictionary"])[0]
     src = str(tmp_path / "in2")
     tiny["transcripts"].write.parquet(src)
     stream = stream_transcripts(spark, src)
@@ -243,9 +243,9 @@ def test_epoch_replay_is_idempotent(spark, tiny, tmp_path):
 
 def test_epochs_hold_persisted_rdds_flat(spark, tiny, tmp_path):
     """Epochs through one pipeline leave no persisted RDD behind: each epoch
-    unpersists the mentions it cached, and the prior cascade's dictionary
-    table is cached once per dictionary plan. RDDs are compared by id, since
-    the context cleaner may drop other tests' RDDs at any time."""
+    unpersists the mentions it cached, and the pipeline's dictionary state is
+    built once. RDDs are compared by id, since the context cleaner may drop
+    other tests' RDDs at any time."""
     from entity_linkings_spark.streaming.incremental import batch_processor
 
     process = batch_processor(LinkagePipeline(tiny["dictionary"]), str(tmp_path / "sink"))
@@ -259,6 +259,60 @@ def test_epochs_hold_persisted_rdds_flat(spark, tiny, tmp_path):
     for epoch in range(1, 4):
         ids = persisted_after(epoch)
         assert ids <= after_first, f"epoch {epoch} left RDDs {ids - after_first} persisted"
+
+
+def _quarters(tiny):
+    convs = sorted(r[0] for r in tiny["transcripts"].select("conv_id").distinct().collect())
+    return [tiny["transcripts"].where(F.col("conv_id").isin(convs[q::4])) for q in range(4)]
+
+
+def test_epochs_derive_dictionary_state_once(tiny, tmp_path, monkeypatch):
+    """Stream epochs reuse the pipeline's token sets and prior table."""
+    from entity_linkings_spark.operators import prior as P
+    from entity_linkings_spark.plans import pipeline
+    from entity_linkings_spark.streaming.incremental import batch_processor
+
+    calls = []
+
+    def spy(mod, name):
+        real = getattr(mod, name)
+        monkeypatch.setattr(mod, name, lambda *a, **k: calls.append(name) or real(*a, **k))
+
+    spy(pipeline, "dictionary_token_sets")
+    spy(P, "prior_table")
+    pipe = LinkagePipeline(tiny["dictionary"])
+    process = batch_processor(pipe, str(tmp_path / "sink"))
+    try:
+        for epoch, turns in enumerate(_quarters(tiny)[:3]):
+            process(turns, epoch)
+    finally:
+        pipe.close()
+    assert sorted(calls) == ["dictionary_token_sets", "prior_table"]
+
+
+def test_failed_epoch_releases_its_mentions(spark, tiny, tmp_path, monkeypatch):
+    """A sink write that raises after the epoch's mentions were computed
+    still unpersists them."""
+    from pyspark.sql import DataFrameWriter
+
+    from entity_linkings_spark.streaming.incremental import batch_processor
+
+    pipe = LinkagePipeline(tiny["dictionary"])
+    process = batch_processor(pipe, str(tmp_path / "sink"))
+    first, second = _quarters(tiny)[:2]
+    process(first, 0)  # builds the pipeline's own state
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def failing_write(writer, path, *a, **k):
+        writer._df.count()  # the epoch's plan, mentions included, runs
+        raise RuntimeError("sink unavailable")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(RuntimeError, match="sink unavailable"):
+        process(second, 1)
+    left = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+    assert not left, f"the failed epoch left RDDs {left} persisted"
+    pipe.close()
 
 
 def test_sniffed_but_undecodable_falls_back_not_crashes(spark):
