@@ -379,37 +379,6 @@ def candidate_pairs_salted(
     )
 
 
-def ngram_idf(
-    surfaces: DataFrame, n: int = 3, max_vocab: int = 200_000
-) -> dict[str, float]:
-    """Corpus IDF over character n-grams of distinct surfaces:
-    idf(g) = ln(1 + N/df(g)). Collected to the driver — the char-n-gram
-    vocabulary of *normalized mentions* is inherently bounded (<~100k entries
-    for ASCII-ish corpora), so this is a dimension-table derivative that ships
-    to executors inside the scorer-UDF closure (operators/scoring.py
-    make_scorer_udf). The bound is ENFORCED, not assumed: a hostile corpus
-    (e.g. CJK mentions, where the 3-gram space explodes) fails loudly with a
-    size error instead of OOMing the driver."""
-    import math
-
-    N = surfaces.count()
-    grams = (
-        surfaces.select(
-            F.explode(F.array_distinct(char_ngrams(norm_exact("surface"), n))).alias("g")
-        )
-        .groupBy("g")
-        .agg(F.count("*").alias("df"))
-    )
-    rows = grams.limit(max_vocab + 1).collect()
-    if len(rows) > max_vocab:
-        raise ValueError(
-            f"ngram_idf: n-gram vocabulary exceeds max_vocab={max_vocab}; "
-            "the IDF table would not be safely broadcastable. Disable use_idf "
-            "or raise max_vocab deliberately."
-        )
-    return {r["g"]: math.log(1.0 + N / r["df"]) for r in rows}
-
-
 def surface_block_keys(
     surfaces: DataFrame,
     num_bands: int = 8,

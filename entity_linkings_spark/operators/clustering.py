@@ -122,21 +122,19 @@ def connected_components(
 
     The entry path costs exactly ONE action for empty and small graphs: a
     ``limit(local_threshold + 1).collect()`` answers "empty?", "small enough
-    to solve locally?" AND (if small) delivers the complete edge set, where
-    the previous shape paid checkpoint + fingerprint + collect = 3 jobs. The
-    localCheckpoint is LAZY: big graphs materialize the frontier as a side
-    effect of that same first action (Spark completes a lazy local
-    checkpoint's missing partitions inside the triggering action), so the
-    contraction loop still starts from a materialized frontier."""
+    to solve locally?" AND (if small) delivers the complete edge set, and
+    leaves nothing persisted. Only big graphs checkpoint their first
+    frontier; the lazy checkpoint is materialized by the first fingerprint
+    action, so the contraction loop starts from a materialized frontier."""
     spark = edges.sparkSession
     cur = _canon(edges)
-    if checkpoint:
-        cur = cur.localCheckpoint(eager=False)
     head = cur.limit(local_threshold + 1).collect()
     if not head:  # empty graph: skip the contraction loop entirely
         return spark.createDataFrame([], "node string, cluster_id string")
     if len(head) <= local_threshold:  # limit returned everything there is
         return _local_components(head, spark)
+    if checkpoint:
+        cur = cur.localCheckpoint(eager=False)
     prev_fp = _edge_fingerprint(cur)
     for _ in range(max_iterations):
         nxt = _small_star(_large_star(cur))

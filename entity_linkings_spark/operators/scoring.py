@@ -15,12 +15,9 @@ rows anywhere:
   * Jaro-Winkler — windowed greedy matching vectorized the same way: the
     loop is over character positions; candidate masks, matched-flag updates
     and transposition counting are (batch, L) numpy ops.
-  * Character n-gram (TF-IDF-weighted) cosine + Jaccard — n-grams encoded as
-    uint64 (c0*2^42 + c1*2^21 + c2), set-deduped by row-sort, intersected via
-    a (batch, L, L) equality tensor; IDF weights come in as two broadcast
-    numpy arrays (sorted codes + weights) and are applied via searchsorted —
-    the n-gram vocabulary of normalized mentions is inherently small
-    (<~100k), so this broadcast scales to any corpus size.
+  * Character n-gram cosine + Jaccard — n-grams encoded as uint64
+    (c0*2^42 + c1*2^21 + c2), set-deduped by row-sort, intersected via a
+    (batch, L, L) equality tensor; every gram weighs the same.
 
 Strings are scored on their normalized (lowercased, trimmed) surfaces and
 truncated to MAXLEN=64 chars (mention surfaces are short; the cap bounds the
@@ -194,7 +191,7 @@ def _ngram_codes(A: np.ndarray, la: np.ndarray) -> tuple[np.ndarray, np.ndarray]
     return g, dedup_valid
 
 
-def _ngram_scores(A, la, B, lb, idf_codes, idf_weights, need_cos: bool = True):
+def _ngram_scores(A, la, B, lb, need_cos: bool = True):
     ga, va = _ngram_codes(A, la)
     gb, vb = _ngram_codes(B, lb)
     eq = (ga[:, :, None] == gb[:, None, :]) & va[:, :, None] & vb[:, None, :]
@@ -206,45 +203,24 @@ def _ngram_scores(A, la, B, lb, idf_codes, idf_weights, need_cos: bool = True):
     # RuntimeWarning on the union==0 lanes even though they are discarded)
     jac = np.divide(inter, union, out=np.zeros_like(inter), where=union > 0)
     if not need_cos:
-        # cosine weight is 0 and no IDF table: skip the argmax gather +
-        # weighting passes entirely (the combined blend is unchanged because
-        # x + 0.0*cos == x for any finite cos)
+        # cosine weight is 0: skip the cosine entirely (the combined blend is
+        # unchanged because x + 0.0*cos == x for any finite cos)
         return np.zeros(len(la)), jac
-
-    def w(g, v):
-        if idf_codes is None or len(idf_codes) == 0:
-            return v.astype(np.float64)
-        pos = np.searchsorted(idf_codes, g)
-        pos = np.clip(pos, 0, len(idf_codes) - 1)
-        hit = idf_codes[pos] == g
-        return np.where(hit, idf_weights[pos], 1.0) * v
-
-    wa, wb = w(ga, va), w(gb, vb)
-    # deduped grams: each row-gram matches at most one on the other side, so
-    # gather via argmax instead of materializing a float (N, L, L) tensor
-    jj = eq.argmax(axis=2)
-    dot = (wa * np.take_along_axis(wb, jj, axis=1) * has).sum(axis=1)
-    na = np.sqrt((wa**2).sum(axis=1))
-    nb = np.sqrt((wb**2).sum(axis=1))
+    # deduped grams weigh 1 each: the dot product is the intersection size
+    # and each norm the square root of the gram count
     with np.errstate(divide="ignore", invalid="ignore"):
-        cos = np.where((na > 0) & (nb > 0), dot / (na * nb), 0.0)
+        cos = np.where((ca > 0) & (cb > 0), inter / (np.sqrt(ca) * np.sqrt(cb)), 0.0)
     # float round-trip can land a hair above 1 (sqrt(3)*sqrt(3) < 3)
     cos = np.clip(cos, 0.0, 1.0)
     return cos, jac
 
 
-def score_batch(
-    sa: pd.Series,
-    sb: pd.Series,
-    idf_codes: np.ndarray | None = None,
-    idf_weights: np.ndarray | None = None,
-    need_cos: bool = True,
-) -> pd.DataFrame:
+def score_batch(sa: pd.Series, sb: pd.Series, need_cos: bool = True) -> pd.DataFrame:
     """Score one Arrow batch of surface pairs; returns the SCORE_SCHEMA frame.
 
-    ``need_cos=False`` (valid only when W_COS == 0 and no IDF) skips the
-    cosine gather — ngram_cosine comes back 0.0 and ``combined`` is unchanged.
-    Used by the combined-only hot path; the full-schema UDF always computes it.
+    ``need_cos=False`` (valid only when W_COS == 0) skips the cosine —
+    ngram_cosine comes back 0.0 and ``combined`` is unchanged. Used by the
+    combined-only hot path; the full-schema UDF always computes it.
     """
     out = {k.name: np.empty(len(sa)) for k in SCORE_SCHEMA.fields}
     for lo in range(0, len(sa), _CHUNK):
@@ -261,7 +237,7 @@ def score_batch(
         ml = np.maximum(np.maximum(la, lb), 1)
         lev = 1.0 - _levenshtein(A, la, B, lb) / ml
         osa = 1.0 - _osa(A, la, B, lb) / ml
-        cos, jac = _ngram_scores(A, la, B, lb, idf_codes, idf_weights, need_cos)
+        cos, jac = _ngram_scores(A, la, B, lb, need_cos)
         out["jaro_winkler"][lo:hi] = jw
         out["lev_ratio"][lo:hi] = lev
         out["osa_ratio"][lo:hi] = osa
@@ -271,52 +247,38 @@ def score_batch(
     return pd.DataFrame(out)
 
 
-def make_scorer_udf(idf: dict[str, float] | None = None, combined_only: bool = False):
-    """Build the pandas UDF, optionally closing over an IDF table
-    {ngram -> weight}. The table is converted to two numpy arrays and shipped
-    once per executor via the UDF closure (broadcast-equivalent).
-
-    ``combined_only=True`` returns a single double instead of the 5-field
-    struct — 1/5 the Arrow result bandwidth for hot paths that only threshold
-    on the blended score."""
-    idf_codes = idf_weights = None
-    if idf:
-        def code(g: str) -> int:
-            c = [ord(ch) for ch in g[:3]] + [0, 0, 0]
-            return (c[0] * _NGRAM_SHIFT + c[1]) * _NGRAM_SHIFT + c[2]
-
-        items = sorted((code(g), w) for g, w in idf.items())
-        idf_codes = np.array([c for c, _ in items], np.uint64)
-        idf_weights = np.array([w for _, w in items], np.float64)
-
+def make_scorer_udf(combined_only: bool = False):
+    """Build the pandas UDF. ``combined_only=True`` returns a single double
+    instead of the 5-field struct — 1/5 the Arrow result bandwidth for hot
+    paths that only threshold on the blended score."""
     if combined_only:
-        # cosine contributes to `combined` only via W_COS (or IDF weighting):
-        # with neither, the gather is dead compute for a combined-only caller
-        need_cos = (idf_codes is not None) or (W_COS != 0.0)
+        # cosine contributes to `combined` only via W_COS: with a zero
+        # weight it is dead compute for a combined-only caller
+        need_cos = W_COS != 0.0
 
         @F.pandas_udf("double")
         def pair_score_combined(sa: pd.Series, sb: pd.Series) -> pd.Series:
-            return score_batch(sa, sb, idf_codes, idf_weights, need_cos)["combined"]
+            return score_batch(sa, sb, need_cos)["combined"]
 
         return pair_score_combined
 
     @F.pandas_udf(SCORE_SCHEMA)
     def pair_score(sa: pd.Series, sb: pd.Series) -> pd.DataFrame:
-        return score_batch(sa, sb, idf_codes, idf_weights)
+        return score_batch(sa, sb)
 
     return pair_score
 
 
-def score_pairs(pairs: DataFrame, idf: dict[str, float] | None = None) -> DataFrame:
+def score_pairs(pairs: DataFrame) -> DataFrame:
     """Attach the score struct columns to a candidate-pair DataFrame."""
-    udf = make_scorer_udf(idf)
+    udf = make_scorer_udf()
     scored = pairs.withColumn("score", udf(F.col("surface_a"), F.col("surface_b")))
     return scored.select("*", "score.*").drop("score")
 
 
-def score_pairs_combined(pairs: DataFrame, idf: dict[str, float] | None = None) -> DataFrame:
+def score_pairs_combined(pairs: DataFrame) -> DataFrame:
     """Attach only the blended ``combined`` column — 1/5 the Arrow result
-    bandwidth and (with W_COS == 0, no IDF) no cosine gather. The hot path for
-    consumers that threshold/argmax on the blend (pipeline ``resolve()``)."""
-    udf = make_scorer_udf(idf, combined_only=True)
+    bandwidth and (with W_COS == 0) no cosine. The hot path for consumers
+    that threshold/argmax on the blend (pipeline ``resolve()``)."""
+    udf = make_scorer_udf(combined_only=True)
     return pairs.withColumn("combined", udf(F.col("surface_a"), F.col("surface_b")))

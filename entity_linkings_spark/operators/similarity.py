@@ -266,7 +266,7 @@ def ivf_codebook(
     corpus vectors ordered by (md5(id), id). Deterministic, and the collect
     is bounded by num_centroids REGARDLESS of corpus size: orderBy+limit is
     a distributed TakeOrdered, only the winners reach the driver. Guarded
-    loudly (mirrors ngram_idf's max_vocab pattern, blocking.py)."""
+    loudly by ``max_centroids``."""
     import numpy as np
 
     if num_centroids > max_centroids:

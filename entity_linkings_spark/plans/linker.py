@@ -51,8 +51,8 @@ from ..operators.blocking import surface_block_keys
 from ..operators.linkage_model import fit_fs_model
 from ..operators.scoring import score_pairs, score_pairs_combined
 
-# FS gamma discretization over the scorer's feature columns — the same
-# ascending-threshold shape the dedup pipeline's fs_match hook uses.
+# FS gamma discretization over the scorer's feature columns: ascending
+# thresholds per feature, the shape linkage_model.comparison_levels reads.
 _FS_THRESHOLDS = {
     "jaro_winkler": [0.80, 0.94],
     "lev_ratio": [0.60, 0.85],

@@ -28,11 +28,10 @@ grouped by resolved entity id — SURVEY.md section 7 hard part (d)):
     (entity_dictionary.py:51-57 NIL fallback).
 
 Pairwise-threshold-only clustering (ignore the dictionary, edges purely from
-the scorer) remains available via ``clusters_by_similarity`` — but on data
-with confusable entities ("Vera Tanaka"/"Sara Tanaka" both typo-mentioned) no
-pairwise threshold separates same-entity typo pairs from cross-entity
-near-misses; resolution-first is what makes F1>=0.99 reachable, exactly as
-the reference's own design implies.
+the scorer) cannot do this: on data with confusable entities ("Vera
+Tanaka"/"Sara Tanaka" both typo-mentioned) no pairwise threshold separates
+same-entity typo pairs from cross-entity near-misses; resolution-first is what
+makes F1>=0.99 reachable, exactly as the reference's own design implies.
 """
 
 from __future__ import annotations
@@ -47,7 +46,6 @@ from pyspark.sql import functions as F
 
 from entity_linkings_spark.operators import blocking as B
 from entity_linkings_spark.operators import clustering as C
-from entity_linkings_spark.operators import linkage_model as L
 from entity_linkings_spark.operators import prior as P
 from entity_linkings_spark.operators import scoring as S
 from entity_linkings_spark.operators.mentions import extract_mentions
@@ -66,37 +64,6 @@ class LinkageConfig:
     resolve_threshold: float = 0.62  # argmax-vs-dictionary acceptance
     hot_block_threshold: int = 256  # triangle-salt blocks hotter than this
     n_salt: int = 8
-    use_idf: bool = False  # corpus-IDF-weighted ngram cosine (thresholds are
-    # calibrated for uniform weights; re-calibrate when enabling)
-    # -- optional audit/prune hooks (VERDICT r7 #5; all off by default so
-    #    the default plan is byte-identical to round 7) --
-    wnp_prune: bool = False  # meta-blocking WNP prune between blocking and
-    # scoring: pairs kept only when their common-block weight reaches the
-    # local mean of either endpoint — cuts the scored-pair volume (the
-    # dominant cost at scale) while keeping every redundancy-positive pair
-    repair_min_density: float | None = None  # similarity-only regime:
-    # after CC, re-cluster clusters whose edge density falls below this
-    # over strong edges only (over-merge repair; clusters() resolution-first
-    # output never needs it — entity clusters are label-glued, not edge-glued)
-    repair_strong_threshold: float = 0.97  # "strong" edge floor for repair
-    fs_match: bool = False  # learn Fellegi-Sunter weights over the scored
-    # pairs (unsupervised EM on one bounded pattern aggregate,
-    # operators/linkage_model.py) and decide NIL-NIL matches by posterior
-    # instead of the hand-fixed blend threshold. Adds gamma_*/fs_weight/
-    # fs_posterior columns to scored_pairs() and switches the NIL string
-    # edge to the learned decision; the resolution-first entity path is
-    # untouched. Costs one extra bounded job (the pattern aggregate) and a
-    # localCheckpoint of the scored pairs (consumed twice: fit + score).
-    fs_posterior_threshold: float = 0.5  # the UNTUNED Bayes point; the
-    # fs-vs-blend tests show it reproduces the blend's best operating
-    # point on the tiny corpus without any threshold search
-    golden: bool = False  # emit a `golden` output from run(): one
-    # canonical row per final cluster under deterministic survivorship
-    # rules (operators/canonicalize.golden_records — longest surface as
-    # the display form, modal resolved entity, max resolve score). Off by
-    # default so run()'s output dict and every default plan stay
-    # byte-identical; costs one hash aggregate plus one bounded
-    # (cluster, entity) count when on.
 
 
 # The paper's dataflow in build order: each stage's name, the stages it reads
@@ -194,7 +161,7 @@ class LinkagePipeline:
     def pairs(self, surfaces: DataFrame, keys: DataFrame | None = None) -> DataFrame:
         if keys is None:
             keys = self.surface_keys(surfaces)
-        base = B.blocking_pairs(
+        return B.blocking_pairs(
             surfaces,
             max_block_size=self.cfg.max_block_size,
             num_bands=self.cfg.num_bands,
@@ -203,32 +170,6 @@ class LinkagePipeline:
             n_salt=self.cfg.n_salt,
             keys=keys,
         )
-        if not self.cfg.wnp_prune:
-            return base
-        # config-gated meta-blocking prune (operators/blocking.py
-        # meta_blocking_wnp): survivors are pairs whose common-block count
-        # reaches the local mean weight of either endpoint. The WNP weight
-        # graph re-derives co-blocked pairs from the SAME capped keys the
-        # pair generator used (one extra bounded block self-join + two
-        # aggregates) — at scale that second pass is cheap next to the
-        # Arrow scoring stage it shrinks, which is the whole point of
-        # pruning BEFORE scoring rather than thresholding after.
-        keep = B.meta_blocking_wnp(
-            B.cap_blocks(keys, self.cfg.max_block_size).select(
-                "skey", "block_key"
-            ),
-            id_col="skey",
-        )
-        return base.join(
-            keep.select(
-                F.col("id_a").alias("skey_a"), F.col("id_b").alias("skey_b")
-            ),
-            ["skey_a", "skey_b"],
-            "left_semi",
-        )
-
-    def idf(self, surfaces: DataFrame) -> dict[str, float] | None:
-        return B.ngram_idf(surfaces) if self.cfg.use_idf else None
 
     # ---- stage 4: scoring ----------------------------------------------------
     def scored_pairs(self, pairs: DataFrame, surfaces: DataFrame) -> DataFrame:
@@ -236,43 +177,17 @@ class LinkagePipeline:
         attached; ``is_match`` = same resolved entity when both resolve, else
         the NIL-NIL string threshold."""
         ev = surfaces.select("skey", "prior_entity")
-        scored = S.score_pairs(pairs, self.idf(surfaces))
-        joined = scored.join(
+        joined = S.score_pairs(pairs).join(
             ev.withColumnsRenamed({"skey": "skey_a", "prior_entity": "ent_a"}), "skey_a", "left"
         ).join(
             ev.withColumnsRenamed({"skey": "skey_b", "prior_entity": "ent_b"}), "skey_b", "left"
         )
-        if self.cfg.fs_match:
-            # config-gated Fellegi-Sunter decision (operators/
-            # linkage_model.py): discretize the scorer's features, fit
-            # m/u/lambda by EM on ONE bounded pattern aggregate (the
-            # checkpoint keeps the Arrow scoring pass from running twice),
-            # then decide string matches at the untuned posterior 0.5
-            # instead of the hand-calibrated blend threshold.
-            joined = joined.localCheckpoint()
-            ths = {
-                "jaro_winkler": [0.80, 0.94],
-                "lev_ratio": [0.60, 0.90],
-                "ngram_jaccard": [0.30, 0.70],
-            }
-            levels = L.comparison_levels(joined, ths)
-            params = L.em_fit(
-                L.pattern_counts(levels, list(ths)),
-                list(ths),
-                {f: len(t) + 1 for f, t in ths.items()},
-            )
-            joined = L.fs_score(levels, params)
-            string_match = F.col("fs_posterior") > F.lit(
-                self.cfg.fs_posterior_threshold
-            )
-        else:
-            string_match = F.col("combined") >= F.lit(self.cfg.match_threshold)
         return joined.withColumn(
             "is_match",
             F.when(
                 F.col("ent_a").isNotNull() & F.col("ent_b").isNotNull(),
                 F.col("ent_a") == F.col("ent_b"),
-            ).otherwise(string_match),
+            ).otherwise(F.col("combined") >= F.lit(self.cfg.match_threshold)),
         )
 
     # ---- stage 5: clustering (resolution-first) ------------------------------
@@ -286,48 +201,14 @@ class LinkagePipeline:
             F.concat(F.lit("ent:"), "entity_id").alias("cluster_id"),
         )
         nil_keys = resolved.where(F.col("entity_id") == NIL_ID).select("skey")
-        # with fs_match on, NIL string edges come from the learned
-        # posterior; default stays the calibrated blend threshold (the
-        # expression below is byte-identical to the pre-hook plan)
-        edge_pred = (
-            F.col("fs_posterior") > F.lit(self.cfg.fs_posterior_threshold)
-            if self.cfg.fs_match
-            else F.col("combined") >= self.cfg.match_threshold
-        )
         nil_edges = (
-            scored.where(edge_pred)
+            scored.where(F.col("combined") >= self.cfg.match_threshold)
             .join(nil_keys.withColumnRenamed("skey", "skey_a"), "skey_a")
             .join(nil_keys.withColumnRenamed("skey", "skey_b"), "skey_b")
             .select(F.col("skey_a").alias("u"), F.col("skey_b").alias("v"))
         )
         nil_assign = C.connected_components(nil_edges)
         assign = ent.unionByName(nil_assign)
-        return C.clusters_with_singletons(
-            assign, surfaces.select(F.col("skey").alias("node"))
-        )
-
-    # ---- alternative: pure pairwise-threshold clustering ---------------------
-    def clusters_by_similarity(self, scored: DataFrame, surfaces: DataFrame) -> DataFrame:
-        """Similarity-only clustering (ignore the dictionary). With
-        ``repair_min_density`` set, the over-merge audit/repair hook runs
-        after CC (operators/clustering.py cluster_density + cluster_repair):
-        clusters glued together by a few borderline edges read a low edge
-        density, get flagged, and are re-clustered over strong edges
-        (``combined >= repair_strong_threshold``) only — splits only, never
-        merges, and only on the flagged subgraph. The resolution-first
-        clusters() path never needs this: its entity clusters are
-        label-glued, not edge-glued."""
-        edges = scored.where("is_match").select(
-            F.col("skey_a").alias("u"), F.col("skey_b").alias("v")
-        )
-        assign = C.connected_components(edges)
-        if self.cfg.repair_min_density is not None:
-            strong = scored.where(
-                F.col("combined") >= self.cfg.repair_strong_threshold
-            ).select(F.col("skey_a").alias("u"), F.col("skey_b").alias("v"))
-            assign = C.cluster_repair(
-                assign, edges, self.cfg.repair_min_density, strong
-            )
         return C.clusters_with_singletons(
             assign, surfaces.select(F.col("skey").alias("node"))
         )
@@ -478,30 +359,7 @@ class LinkagePipeline:
             self.close()  # every stage that read the state is checkpointed
         del out["blocking_keys"]
         out["resolved_mentions"] = out["resolved_mentions"].orderBy("conv_id", "turn_idx", "start")
-        if self.cfg.golden:
-            out["golden"] = self.golden(out["clusters"], out["surfaces"], out["resolved"])
         return out
-
-    def golden(
-        self, clusters: DataFrame, surfaces: DataFrame, resolved: DataFrame
-    ) -> DataFrame:
-        """One canonical row per final cluster (golden-record
-        survivorship, operators/canonicalize.golden_records): the longest
-        member surface as the display form, the modal resolved entity id,
-        and the best resolve score — the exported entity table a consumer
-        reads instead of re-deriving canonical forms per query. All picks
-        are deterministic hash aggregates (ties -> greatest value)."""
-        from entity_linkings_spark.operators import canonicalize as G
-
-        records = surfaces.select("skey", "surface").join(
-            resolved.select("skey", "entity_id", "score"), "skey", "left"
-        )
-        return G.golden_records(
-            clusters,
-            records,
-            {"surface": "longest", "entity_id": "mode", "score": "max"},
-            key="skey",
-        )
 
 
 class InMemory:

@@ -85,16 +85,6 @@ def test_salted_pairs_equal_plain(spark):
     assert plain.count() == salted.count() > 0
 
 
-def test_ngram_idf_builder(spark):
-    import math
-
-    sf = _surfaces(spark, ["alpha beta", "alpha gamma", "zzz qqq"])
-    idf = B.ngram_idf(sf)
-    # 'alp' appears in 2 of 3 surfaces, 'zzz' in 1 -> rarer gram gets more weight
-    assert idf["zzz"] > idf["alp"] > 0
-    assert idf["zzz"] == math.log(1 + 3 / 1)
-
-
 def test_global_rank_matches_total_order_any_partitioning(spark):
     """global_rank == the position in the (key, id) total order, regardless
     of how many range partitions the sampler chose — the rank is a

@@ -154,8 +154,8 @@ def test_incremental_empty_delta_is_identity(spark):
 
 def test_small_graph_cc_costs_at_most_two_jobs(spark):
     """VERDICT r2 item 4 (job-count cut), pinned with a drift-free metric:
-    the small-graph CC entry is ONE action — the limit-collect — plus at
-    most the lazy localCheckpoint's backfill job. The previous shape
+    the small-graph CC entry is ONE action — the limit-collect, which AQE
+    runs as a shuffle-stage job and a result job. The previous shape
     (eager checkpoint + fingerprint + collect) cost 3 actions / 4+ jobs."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "u string, v string"
@@ -166,6 +166,17 @@ def test_small_graph_cc_costs_at_most_two_jobs(spark):
     j1 = sc._jsc.sc().dagScheduler().nextJobId()
     assert j1 - j0 <= 2
     assert out.count() == 5  # result itself is a local createDataFrame
+
+
+def test_driver_solved_and_empty_cc_leave_nothing_persisted(spark):
+    """Only the contraction path checkpoints an edge frontier: an empty graph
+    and one the driver solves leave no RDD persisted."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    connected_components(spark.createDataFrame([("a", "b"), ("b", "c")], "u string, v string"))
+    connected_components(spark.createDataFrame([], "u string, v string"))
+    left = set(jsc.getPersistentRDDs().keySet()) - before
+    assert not left, f"connected_components left RDDs {left} persisted"
 
 
 def test_cluster_density_flags_hub_glued_cluster(spark):

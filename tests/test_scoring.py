@@ -92,18 +92,6 @@ def test_chunk_boundary():
     assert len(got) == n
 
 
-def test_idf_weighting_changes_cosine():
-    from entity_linkings_spark.operators.scoring import make_scorer_udf  # noqa: F401
-    a = pd.Series(["abcx"]); b = pd.Series(["abcy"])
-    base = score_batch(a, b)["ngram_cosine"][0]
-    # down-weight the shared gram 'abc' -> cosine must drop
-    import numpy as np
-    from entity_linkings_spark.operators import scoring as S
-    code = (ord("a") * S._NGRAM_SHIFT + ord("b")) * S._NGRAM_SHIFT + ord("c")
-    w = score_batch(a, b, np.array([code], np.uint64), np.array([0.1]))["ngram_cosine"][0]
-    assert w < base
-
-
 def test_long_string_truncation_safe():
     r = _score("x" * 500, "x" * 499 + "y")
     assert r["combined"] > 0.9  # truncated at MAXLEN, still sane
